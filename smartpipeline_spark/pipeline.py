@@ -3,10 +3,15 @@
 The reference's ``Pipeline`` (``smartpipeline/pipeline.py:57-89``,
 SURVEY.md §2.5) owns an ordered dict of queue-linked stage containers
 and drives them with threads. Here the "plan" is a lazily-composed
-DataFrame lineage: ``set_source`` yields the initial DataFrame, every
-``append``/``transform`` extends it, and ``run()`` executes ONE Spark
-action. Catalyst owns optimization; consecutive user stages are fused
-into a single ``mapInPandas`` so items cross the Arrow boundary once.
+DataFrame lineage: ``set_source`` yields the initial DataFrame and every
+``append``/``transform`` extends it. Catalyst owns optimization;
+consecutive user stages are fused into a single ``mapInPandas`` so
+items cross the Arrow boundary once.
+
+The sink actions pass each item through the Python stages once per
+build: after ``write()`` commits a parquet or orc output (mode
+overwrite or error), ``write_errors()`` and ``error_summary()`` read
+that output instead of re-running the chain; ``run()`` always runs it.
 
 API familiarity is preserved where it costs nothing (``set_source``,
 ``append(name, stage, concurrency=, parallel=, retryable_errors=,
@@ -43,6 +48,32 @@ from smartpipeline_spark.wrapper import (
 )
 
 SourceLike = Union[DataFrame, Source, Callable[[SparkSession], DataFrame]]
+
+# write() outputs that later actions on the same build read back: files
+# in a format that stores the schema, holding exactly this build's rows
+# (append adds to older rows, ignore may have written nothing)
+_READ_BACK_FORMATS = ("parquet", "orc")
+_READ_BACK_MODES = ("overwrite", "error", "errorifexists")
+
+
+def _paths_overlap(spark: SparkSession, a: str, b: str) -> bool:
+    """Whether ``a`` and ``b`` name the same directory or one lies
+    inside the other, compared as Hadoop-qualified paths (so a trailing
+    slash, a relative path or a ``file:`` scheme make no difference)."""
+    sc = spark.sparkContext
+    conf = sc._jsc.hadoopConfiguration()
+
+    def lineage(path: str) -> list[str]:
+        p = sc._jvm.org.apache.hadoop.fs.Path(path)
+        p = p.getFileSystem(conf).makeQualified(p)
+        out = []
+        while p is not None:
+            out.append(p.toString())
+            p = p.getParent()
+        return out
+
+    la, lb = lineage(a), lineage(b)
+    return la[0] in lb or lb[0] in la
 
 
 class _LogListParam(AccumulatorParam):
@@ -107,6 +138,9 @@ class Pipeline:
         self._steps: list[_PlanStep] = []
         self._names: set[str] = set()
         self._built_df: DataFrame | None = None
+        # (fmt, path) of the output write() committed for the current
+        # build, which write_errors()/error_summary() read back
+        self._committed: tuple[str, str] | None = None
         # disambiguates the executor-side initialized-stage cache: two
         # pipelines reusing a stage name + class within one long-lived
         # Python worker must not share (stale) stage instances
@@ -147,7 +181,7 @@ class Pipeline:
         (driver-drained, for genuinely driver-local feeds)."""
         self._source = source
         self._source_schema = schema
-        self._built_df = None
+        self._discard_build()
         return self
 
     def append(
@@ -192,7 +226,7 @@ class Pipeline:
                 cache=cache,
             )
         )
-        self._built_df = None
+        self._discard_build()
         return self
 
     def append_concurrently(self, name, stage_class, args=(), kwargs=None, **append_kw):
@@ -209,8 +243,12 @@ class Pipeline:
             raise ValueError(f"stage name already used: {name!r}")
         self._names.add(name)
         self._steps.append(_PlanStep("transform", name, fn=fn))
-        self._built_df = None
+        self._discard_build()
         return self
+
+    def _discard_build(self) -> None:
+        self._built_df = None
+        self._committed = None
 
     def get_stage(self, name: str):
         for s in self._steps:
@@ -317,7 +355,9 @@ class Pipeline:
             want = explicit if has_batch else max(
                 explicit, df.sparkSession.sparkContext.defaultParallelism
             )
-            if want > df.rdd.getNumPartitions():
+            # probe only when widening is possible: on a plan with an
+            # exchange, .rdd runs the upstream shuffle-map stage
+            if want and want > df.rdd.getNumPartitions():
                 df = df.repartition(want)
         if self._ship_logs and self._log_acc is None:
             self._log_acc = df.sparkSession.sparkContext.accumulator(
@@ -335,6 +375,7 @@ class Pipeline:
         return df.mapInPandas(fn, schema=ddl)
 
     def build(self) -> "Pipeline":
+        self._committed = None
         self._built_df = self._compile()
         return self
 
@@ -346,27 +387,48 @@ class Pipeline:
     # ------------------------------------------------------------------
     # execution
     # ------------------------------------------------------------------
+    def _output_df(self) -> DataFrame:
+        """The build's output for the actions that follow ``write()``:
+        the files it committed, read with the build's schema, or the
+        compiled plan when there are none."""
+        df = self.dataframe()
+        if self._committed is None:
+            return df
+        fmt, path = self._committed
+        return df.sparkSession.read.schema(df.schema).format(fmt).load(path)
+
     def run(self) -> Iterator[Item]:
         """Execute and yield finished Items (reference ``run()``
-        generator → ``toLocalIterator`` over the compiled plan).
+        generator → ``toLocalIterator`` over the compiled plan). It
+        always runs the plan, also after ``write()``, so the items keep
+        the plan's order.
 
         Teardown on consumer break: the reference stops its containers
         when the caller closes/breaks out of the generator
         (``/root/reference/smartpipeline/pipeline.py:283-286``). Here
-        every job the iterator triggers runs under a dedicated job
-        group; if the generator is abandoned before exhaustion, the
-        group is cancelled so prefetched partition jobs don't keep
-        executing behind the caller's back."""
-        import uuid as _uuid
-
+        every job the iterator triggers carries a per-run job tag; if
+        the generator is abandoned before exhaustion, the tagged jobs
+        are cancelled so prefetched partition jobs don't keep executing
+        behind the caller's back. The caller's job group and other
+        local properties are left as they were."""
         df = self.dataframe()
         payload_cols = [c for c in df.columns if c not in (ERRORS_COL, TIMINGS_COL)]
         sc = df.sparkSession.sparkContext
-        group = f"smartpipeline-run-{_uuid.uuid4().hex}"
-        sc.setJobGroup(group, "Pipeline.run()", interruptOnCancel=True)
+        tag = f"smartpipeline-run-{uuid.uuid4().hex}"
+        interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(True)
+        try:
+            # the JVM thread that runs the iterator's jobs copies this
+            # thread's local properties when it starts, so they can be
+            # restored before the first item is handed out
+            rows = df.toLocalIterator(prefetchPartitions=True)
+        finally:
+            sc.removeJobTag(tag)
+            sc.setLocalProperty("spark.job.interruptOnCancel", interrupt)
         completed = False
         try:
-            for row in df.toLocalIterator(prefetchPartitions=True):
+            for row in rows:
                 d = row.asDict(recursive=True)
                 item = Item({k: d.get(k) for k in payload_cols if k != DATA_COL})
                 for k, v in (d.get(DATA_COL) or {}).items():
@@ -379,8 +441,7 @@ class Pipeline:
             completed = True
         finally:
             if not completed:  # break / close() / thrown exception
-                sc.cancelJobGroup(group)
-            sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.cancelJobsWithTag(tag)
             self._drain_shipped_logs()
 
     def _drain_shipped_logs(self) -> None:
@@ -450,10 +511,22 @@ class Pipeline:
         the write itself, no second scan (the reference's pipeline
         counter, SURVEY §2.5, rebuilt as an accumulator-style metric).
         Metrics land in ``self.last_metrics``.
+
+        ``write()`` always runs the compiled plan. When it commits a
+        parquet or orc output in mode ``overwrite``, ``error`` or
+        ``errorifexists``, the pipeline records it for the current
+        build, and :meth:`write_errors` and :meth:`error_summary` then
+        read those files instead of running every item through the
+        stages again: their results come from the same pass as the
+        written rows. Those reads see the files at ``path`` as
+        they are when each action runs. Any other format or mode, a
+        failed write, or ``build()``/``set_source()``/``append()``/
+        ``transform()`` drops the record, and the actions recompute.
         """
         from pyspark.sql import Observation
 
         df = self.dataframe()
+        self._committed = None
         obs = None
         if not df.isStreaming:
             obs = Observation()
@@ -468,6 +541,8 @@ class Pipeline:
             self.last_metrics = dict(obs.get)
             with self._count_lock:
                 self._count += int(self.last_metrics.get("n_items") or 0)
+            if fmt.lower() in _READ_BACK_FORMATS and mode.lower() in _READ_BACK_MODES:
+                self._committed = (fmt, path)
         self._drain_shipped_logs()
         return self
 
@@ -476,8 +551,18 @@ class Pipeline:
         exploded stage/kind/message/exc_class), written distributed.
         The engine-side analog of the reference docs' custom
         ErrorManager that ships errors to Elasticsearch — point this
-        at any Spark-writable target instead."""
-        df = self.dataframe()
+        at any Spark-writable target instead.
+
+        After a recorded ``write()`` (see :meth:`write`) this reads the
+        committed output as it is now, so the dead-letter rows are the
+        written rows' errors; otherwise it runs the compiled plan.
+        Writing to the committed output's path, to a directory above it
+        or to one inside it drops the record."""
+        if self._committed is not None and _paths_overlap(
+            self.dataframe().sparkSession, self._committed[1], path
+        ):
+            self._committed = None
+        df = self._output_df()
         errs = df.filter(F.size(F.col(ERRORS_COL)) > 0).withColumn(
             "_err", F.explode(F.col(ERRORS_COL))
         )
@@ -498,8 +583,13 @@ class Pipeline:
         groupBy over the exploded ``_errors`` column (the explode is
         map-side; only the tiny (stage, kind, class) triples
         shuffle). Use :meth:`write_errors` for the full row-level
-        dead-letter feed."""
-        df = self.dataframe()
+        dead-letter feed.
+
+        After a recorded ``write()`` (see :meth:`write`) the returned
+        DataFrame scans the committed output, and sees the files at
+        that path as they are when an action runs on it; otherwise it
+        runs the compiled plan."""
+        df = self._output_df()
         return (
             df.select(F.explode(F.col(ERRORS_COL)).alias("_err"))
             .groupBy(

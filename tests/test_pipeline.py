@@ -4,6 +4,7 @@ contents and stage attribution, retry counts/timing envelopes, batch
 semantics, count, and local/distributed parity.
 """
 
+import contextlib
 import time
 
 import pytest
@@ -783,3 +784,284 @@ def test_error_summary_aggregates_the_error_channel(spark, items_df):
     assert rows[("soft", "soft", "SoftError")] == 50
     assert rows[("crit", "critical", "ValueError")] == 20
     assert sum(rows.values()) == 70
+
+
+# ---------------------------------------------------------------------------
+# write_errors()/error_summary() after write() read its committed output;
+# build() and run() leave the caller's Spark state alone
+# ---------------------------------------------------------------------------
+
+class CoinFlipSoft(Stage):
+    """Non-deterministic: a second pass over the same item disagrees
+    with the first about half of the time."""
+
+    def process(self, item):
+        import random
+
+        if random.random() < 0.5:
+            raise SoftError("coin flip")
+        return item
+
+
+class CountCalls(Stage):
+    """Leaves one file in ``calls_dir`` per process() call. (An
+    accumulator held by the stage would miss updates: each Python
+    worker keeps the instance of its first task.)"""
+
+    def __init__(self, calls_dir):
+        self._dir = calls_dir
+
+    def process(self, item):
+        import os
+        import uuid
+
+        open(os.path.join(self._dir, uuid.uuid4().hex), "w").close()
+        return item
+
+
+def _calls(calls_dir):
+    import os
+
+    return len(os.listdir(calls_dir))
+
+
+def _summary_total(pipe):
+    return sum(r.n_errors for r in pipe.error_summary().collect())
+
+
+@pytest.mark.parametrize("mode", ["overwrite", "error"])
+def test_actions_after_write_agree_with_the_written_rows(spark, tmp_path, mode):
+    df = spark.createDataFrame([{"id": i} for i in range(200)])
+    pipe = Pipeline(spark).set_source(df).append("flip", CoinFlipSoft()).build()
+    pipe.write(str(tmp_path / "out"), mode=mode)
+    pipe.write_errors(str(tmp_path / "dead"))
+    written = spark.read.parquet(str(tmp_path / "out"))
+    failed = {r.id for r in written.filter("size(_errors) > 0").collect()}
+    dead = {r.id for r in spark.read.parquet(str(tmp_path / "dead")).collect()}
+    assert 0 < len(failed) < 200
+    assert dead == failed
+    assert _summary_total(pipe) == pipe.last_metrics["error_items"] == len(failed)
+
+
+def test_write_runs_each_item_through_the_stages_once(spark, items_df, tmp_path):
+    calls = tmp_path / "calls"
+    calls.mkdir()
+    pipe = (
+        Pipeline(spark)
+        .set_source(items_df)
+        .append("count", CountCalls(str(calls)))
+        .append("soft", SoftFailEven())
+        .build()
+    )
+    pipe.write(str(tmp_path / "out"))
+    pipe.write_errors(str(tmp_path / "dead"))
+    assert _summary_total(pipe) == 50
+    assert _calls(calls) == 100
+    assert len(list(pipe.run())) == 100  # run() always runs the plan
+    assert _calls(calls) == 200
+
+
+@pytest.mark.parametrize(
+    "fmt, mode", [("json", "overwrite"), ("noop", "overwrite"), ("parquet", "append"),
+                  ("parquet", "ignore")],
+)
+def test_other_formats_and_modes_recompute(spark, items_df, tmp_path, fmt, mode):
+    calls = tmp_path / "calls"
+    calls.mkdir()
+    out = str(tmp_path / "out")
+    if mode != "overwrite":
+        # a prior output at the path: append adds to it, ignore keeps it
+        Pipeline(spark).set_source(items_df).append("crit", CriticalOnFive()).write(out)
+    pipe = (
+        Pipeline(spark)
+        .set_source(items_df)
+        .append("count", CountCalls(str(calls)))
+        .append("soft", SoftFailEven())
+        .build()
+    )
+    pipe.write(out, fmt=fmt, mode=mode)
+    written = 0 if mode == "ignore" else 100  # ignore leaves `out` alone
+    assert _calls(calls) == written
+    pipe.write_errors(str(tmp_path / "dead"))
+    dead = spark.read.parquet(str(tmp_path / "dead"))
+    assert sorted(r["count"] for r in dead.collect()) == list(range(2, 101, 2))
+    assert {r.error_stage for r in dead.collect()} == {"soft"}
+    rows = {(r.stage, r.kind): r.n_errors for r in pipe.error_summary().collect()}
+    assert rows == {("soft", "soft"): 50}
+    assert len(list(pipe.run())) == 100
+    assert _calls(calls) == written + 300
+
+
+def test_rebuild_after_write_drops_the_committed_output(spark, items_df, tmp_path):
+    calls = tmp_path / "calls"
+    calls.mkdir()
+    out = str(tmp_path / "out")
+    pipe = Pipeline(spark).set_source(items_df).append("count", CountCalls(str(calls)))
+    pipe.write(out)
+    pipe.write(out)  # overwrites from the compiled plan, not from `out`
+    assert spark.read.parquet(out).count() == 100
+    assert _calls(calls) == 200
+    pipe.build()
+    assert len(list(pipe.run())) == 100
+    assert _calls(calls) == 300
+    pipe.write(out)
+    pipe.append("dup", TextDuplicator())
+    items = list(pipe.run())
+    assert all(it.data["text_copy"] == it.data["text"] for it in items)
+    pipe.write(out)
+    pipe.transform("odd", lambda d: d.filter(d["count"] % 2 == 1))
+    assert len(list(pipe.run())) == 50
+    pipe.write(out)
+    pipe.set_source(items_df.limit(10))
+    assert len(list(pipe.run())) == 5
+
+
+@pytest.mark.parametrize(
+    "dead_of", [lambda out: out, lambda out: out + "/", lambda out: "file:" + out,
+                lambda out: out.rsplit("/", 1)[0], lambda out: out + "/dead"],
+    ids=["same", "trailing-slash", "file-scheme", "parent", "child"],
+)
+def test_write_errors_over_the_committed_output(spark, items_df, tmp_path, dead_of):
+    out = str(tmp_path / "base" / "out")
+    dead = dead_of(out)
+    pipe = Pipeline(spark).set_source(items_df).append("soft", SoftFailEven())
+    pipe.write(out)
+    pipe.write_errors(dead)  # recomputes: it overwrites what it would read
+    assert spark.read.parquet(dead).count() == 50
+    assert _summary_total(pipe) == 50
+
+
+def test_failed_error_mode_write_leaves_no_record(spark, items_df, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    calls = tmp_path / "calls"
+    calls.mkdir()
+    out = str(tmp_path / "out")
+    Pipeline(spark).set_source(items_df).append("crit", CriticalOnFive()).write(out)
+    pipe = (
+        Pipeline(spark)
+        .set_source(items_df)
+        .append("count", CountCalls(str(calls)))
+        .append("soft", SoftFailEven())
+        .build()
+    )
+    with pytest.raises(AnalysisException):
+        pipe.write(out, mode="error")
+    before = _calls(calls)
+    pipe.write_errors(str(tmp_path / "dead"))
+    assert _calls(calls) == before + 100  # recomputed, `out` is not this build's
+    dead = spark.read.parquet(str(tmp_path / "dead")).collect()
+    assert {(r.error_stage, r.error_kind) for r in dead} == {("soft", "soft")}
+    assert len(dead) == 50
+
+
+def test_run_after_write_keeps_the_plans_order(spark, tmp_path):
+    # later counts carry longer texts, so the sorted output's four files
+    # grow with the sort key; Spark reads files back largest first
+    df = spark.createDataFrame([{"count": i, "text": "x" * i} for i in range(1, 401)])
+    pipe = (
+        Pipeline(spark)
+        .set_source(df.repartition(4))
+        .append("r", TextReverser())
+        .transform(
+            "sort",
+            lambda d: d.repartitionByRange(4, "count").sortWithinPartitions("count"),
+        )
+        .build()
+    )
+    pipe.write(str(tmp_path / "out"))
+    pipe.write_errors(str(tmp_path / "dead"))
+    assert [it.data["count"] for it in pipe.run()] == list(range(1, 401))
+
+
+class RichDynamic(Stage):
+    dynamic = True
+    output_fields = {"label": "string"}
+
+    def process(self, item):
+        item.data["label"] = f"n{item.data['id']}"
+        item.data[f"dyn_{item.data['id'] % 3}"] = str(item.data["id"])
+        if item.data["id"] % 2:
+            raise SoftError(f"odd {item.data['id']}")
+        return item
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_read_back_round_trips_the_compiled_items(spark, tmp_path, fmt):
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import Row
+
+    rows = [
+        Row(
+            id=i,
+            ts=dt.datetime(2024, 1, 1, 12, 0, 0, 123456) + dt.timedelta(seconds=i),
+            amount=Decimal(f"{i}.25"),
+            tags=[f"t{i}", None],
+            attrs={"k": i * 1.5},
+            point=Row(x=i, y=f"p{i}"),
+        )
+        for i in range(20)
+    ]
+    schema = ("id long, ts timestamp, amount decimal(12,2), tags array<string>, "
+              "attrs map<string,double>, point struct<x:int,y:string>")
+    df = spark.createDataFrame(rows, schema)
+    pipe = Pipeline(spark).set_source(df).append("rich", RichDynamic()).build()
+
+    def dead_letters(name):
+        pipe.write_errors(str(tmp_path / name))
+        return sorted(spark.read.parquet(str(tmp_path / name)).collect(), key=lambda r: r.id)
+
+    def summary():
+        return sorted(tuple(r) for r in pipe.error_summary().collect())
+
+    compiled, compiled_summary = dead_letters("dead_compiled"), summary()
+    pipe.write(str(tmp_path / "out"), fmt=fmt)
+    assert dead_letters("dead_read_back") == compiled
+    assert summary() == compiled_summary == [("rich", "soft", "SoftError", 10)]
+    assert compiled[1]["_data"] == {"dyn_0": "3"} and compiled[1]["point"] == Row(x=3, y="p3")
+
+
+@contextlib.contextmanager
+def _job_group(sc, group, description):
+    """The caller's job group for the block; cleared afterwards so it
+    does not leak into later tests on the shared session."""
+    sc.setJobGroup(group, description)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+def test_build_probes_no_partitions_when_it_cannot_widen(spark, items_df):
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    pipe = (
+        Pipeline(spark)
+        .set_source(items_df.coalesce(1))
+        .append("r", TextReverser())
+        .transform("keep", lambda d: d.filter(F.col("count") > 3))
+        .append("b", BatchReverser(size=10))
+    )
+    with _job_group(sc, "build-probe", "build()"):
+        pipe.build()
+    assert sc.statusTracker().getJobIdsForGroup("build-probe") == []
+
+
+def test_run_keeps_the_callers_job_group(spark, items_df):
+    sc = spark.sparkContext
+    pipe = Pipeline(spark).set_source(items_df).append("r", TextReverser()).build()
+    with _job_group(sc, "caller", "caller's jobs"):
+        assert len(list(pipe.run())) == 100
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        gen = pipe.run()
+        next(gen)
+        gen.close()
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller's jobs"
+        assert sc.getLocalProperty("spark.job.interruptOnCancel") == "false"
+        assert not set(sc.getJobTags())
+        # run()'s jobs ran inside the caller's group
+        assert sc.statusTracker().getJobIdsForGroup("caller")
